@@ -36,6 +36,7 @@ class PassResult:
     fingerprint: str
     batch_s: list = field(default_factory=list)  # per micro-batch wall
     cpu_s: float = 0.0  # CPU seconds of driver, JVM and workers in the pass
+    steal_share: float = 0.0  # share of the machine's CPU time the host stole
     extra: dict = field(default_factory=dict)
 
 
@@ -119,6 +120,7 @@ class Workload:
 
     name = ""
     WARMUP_PASSES = 1
+    TIMED_PASSES = 1  # at least this many timed passes per run
 
     def __init__(self, seed: int):
         self.seed = seed
@@ -356,10 +358,9 @@ class DedupDocs(Workload):
     minhash -> components, simhash -> components and semdedup."""
 
     name = "dedup_docs"
-    # the pass after the cold one still varies with JIT progress: over ten
-    # seeds its wall spread 19.5% (IQR/median); after a second warm-up pass
-    # the timed pass spread 10.0%
-    WARMUP_PASSES = 2
+    # the pass after the cold one is still 2-19% slower than the next (JIT
+    # progress); timing two passes halves its weight in the median
+    TIMED_PASSES = 2
     N_FAMILIES = 100
     FAMILY = 3
     WORDS = 200
