@@ -12,12 +12,16 @@ DataFrame min-over-partition-window rounds:
 
 Each star pass is ONE shuffle: the per-node minimum is a window aggregate
 over the neighbour rows already co-located by u (a groupBy + join-back
-would shuffle the neighbour table a second time — see _large_star);
-convergence is when the edge set is a fixpoint (a forest of depth-1 stars
-whose centres are the component minima).  Rounds are ``localCheckpoint``-ed
-so lineage stays bounded — the 10^12-scale variant swaps that for a
-checkpoint-table write per round (plans/checkpoint.py) which also makes the
-loop resumable.
+would shuffle the neighbour table a second time — see _large_star).
+After each round one per-node aggregate over the round's canonical
+(u < v) edges — min parent, max parent, is-a-parent — decides convergence:
+the edges form a star forest when every child has exactly one parent and
+no parent is a child, and each star's centre is then its component
+minimum.  The same aggregate is the result, so reaching the star forest
+ends the call: no confirming round, no labelling join.  Rounds are
+``localCheckpoint``-ed so lineage stays bounded — the 10^12-scale variant
+swaps that for a checkpoint-table write per round (plans/checkpoint.py)
+which also makes the loop resumable.
 
 There is no reference implementation to cite — the reference enforces 1:1
 matches instead (`/root/reference/matcher/matcher.py:1429-1481`); transitive
@@ -107,8 +111,18 @@ def connected_components(
 ) -> DataFrame:
     """Label every node with the minimum node id of its component.
 
-    Returns ``(node, component)``.  O(log^2 n) rounds; on the chain/star
-    graphs of the tests, <10.
+    Returns ``(node, component)`` for every endpoint of a non-self-loop
+    edge; null-endpoint edges and self-loops are dropped.  O(log^2 n)
+    rounds; on the chain/star graphs of the tests, <10.  Raises
+    ``RuntimeError`` when ``max_iterations`` rounds end before a star
+    forest, rather than return split components.
+
+    Jobs: a round is one action, the star-forest aggregate, which also
+    materialises the round's lazy checkpoints.  Under AQE that is 6 Spark
+    jobs (one per exchange: large-star, small-star, canonical dedup,
+    per-node aggregate, global count; plus the result), and reading the
+    returned frame adds one: 7 jobs on 100 disjoint triangles, which
+    reach a star forest in one round.
 
     HAZARD — ``checkpoint=False`` disables the per-round lineage cut
     entirely and is safe ONLY for graphs that converge in ~1 round
@@ -124,68 +138,39 @@ def connected_components(
     ``persist`` dedups execution but not the logical tree the planner
     walks, and an RDD round-trip pickles every row through Python.
     """
-    def _sig_agg(df: DataFrame) -> DataFrame:
-        """Order-independent set signature as a 1-row aggregate frame
-        (count + sum of row hashes) instead of an exceptAll join."""
-        return df.agg(
-            F.count("*").alias("n"),
-            # decimal sum: xxhash64 values overflow bigint under ANSI mode
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        )
-
-    def _signature(df: DataFrame) -> tuple:
-        row = _sig_agg(df).first()
-        return (row["n"], row["h"])
-
-    # LAZY localCheckpoint + eager signature: the signature aggregate is
-    # the action that materialises (and thereby checkpoints) each round's
-    # edge set, so every round costs ONE job instead of two (the eager
-    # checkpoint job + a separate signature job) — at a fixed ~0.1-0.3 s
-    # of scheduling latency per job, that halves the per-round overhead
-    # that dominates CC on small/converged graphs while changing nothing
-    # at scale (the same partitions are computed once either way).
-    e = _canonical(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
+    # no input dedup: large-star is orientation- and duplicate-neutral and
+    # small-star canonicalises; the filter drops self-loops and nulls.  The
+    # input is still checkpointed: large-star reads it twice, and a lazy
+    # upstream (pair generation, scoring UDFs) must run only once.
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
+        F.col("u") != F.col("v")
+    )
     if checkpoint:
         e = e.localCheckpoint(eager=False)
-    sig = None
-
+    # not a star forest: a child with two parents, or a parent that is a child
+    split = F.col("lo").isNotNull() & ((F.col("lo") != F.col("hi")) | F.col("pa"))
     for _ in range(max_iterations):
-        stepped = _small_star(_large_star(e))
+        e = _small_star(_large_star(e))
         if checkpoint:
-            stepped = stepped.localCheckpoint(eager=False)
-        if sig is None:
-            # round 1 folds the INPUT signature into its own job (a union
-            # of the two 1-row aggregates): the input checkpoint is a
-            # shared dependency computed once, so the former standalone
-            # input-signature action — pure per-action scheduling latency
-            # at any scale — disappears.  Signature values are unchanged.
-            rows = (
-                _sig_agg(e).withColumn("_w", F.lit(0))
-                .unionByName(_sig_agg(stepped).withColumn("_w", F.lit(1)))
-                .collect()
-            )
-            by = {r["_w"]: (r["n"], r["h"]) for r in rows}
-            sig, new_sig = by[0], by[1]
-        else:
-            new_sig = _signature(stepped)
-        e = stepped
-        if new_sig == sig:
-            break
-        sig = new_sig
-
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    # at the fixpoint edges are (root, child) with root < child
-    labels = (
-        e.select(F.col("v").alias("node"), F.col("u").alias("component"))
-        .groupBy("node")
-        .agg(F.min("component").alias("component"))
-    )
-    return nodes.join(labels, "node", "left").select(
-        "node", F.coalesce("component", "node").alias("component")
+            e = e.localCheckpoint(eager=False)
+        # one aggregate per round: per node its min/max parent (null for
+        # a node that is never a child) and whether it is itself a parent
+        child = e.select(
+            F.col("v").alias("node"), F.col("u").alias("p"), F.lit(False).alias("pa")
+        )
+        parent = e.select(
+            F.col("u").alias("node"), F.lit(None).alias("p"), F.lit(True).alias("pa")
+        )
+        nodes = child.union(parent).groupBy("node").agg(
+            F.min("p").alias("lo"), F.max("p").alias("hi"), F.max("pa").alias("pa")
+        )
+        if checkpoint:
+            nodes = nodes.localCheckpoint(eager=False)
+        # this action materialises both lazy checkpoints of the round
+        if nodes.agg(F.count_if(split)).first()[0] == 0:
+            return nodes.select("node", F.coalesce("lo", "node").alias("component"))
+    raise RuntimeError(
+        f"connected_components: no star forest after {max_iterations} rounds"
     )
 
 

@@ -39,10 +39,6 @@ REDACTION_ORDER: list[tuple[str, str, str]] = [
 ]
 
 
-def _n_matches(text_col: str, pattern: str) -> F.Column:
-    return F.size(F.regexp_extract_all(F.col(text_col), F.lit(pattern), F.lit(0)))
-
-
 def pii_counts(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

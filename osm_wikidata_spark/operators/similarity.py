@@ -624,8 +624,9 @@ def _cell_pair_kernel(threshold: float, margin: float = 2e-6, block: int = 2048)
     Pairs are oriented by a strict id comparison (equal-id pairs drop,
     as under the former ``left_id < right_id`` join filter).  The pair
     matrix is evaluated in ``block``×``block`` tiles so a degenerate
-    giant cell costs O(n²) work (as the former self-join did) but only
-    ~``block²`` transient memory.
+    giant cell costs O(n²) work (as the former self-join did) and
+    ~``block²`` transient memory on top of the cell's n×dim matrix.
+    Duplicate ids within a cell raise ``ValueError``.
     """
 
     def kernel(pdf):
@@ -633,16 +634,22 @@ def _cell_pair_kernel(threshold: float, margin: float = 2e-6, block: int = 2048)
         import pandas as pd
 
         n = len(pdf)
+        # typed from the input so string ids stay strings
+        no_ids = pdf["doc"].iloc[:0].to_numpy()
         empty = pd.DataFrame(
             {
-                "left_id": pd.array([], dtype="int64"),
-                "right_id": pd.array([], dtype="int64"),
-                "cos": pd.array([], dtype="float64"),
+                "left_id": no_ids,
+                "right_id": no_ids,
+                "cos": np.array([], dtype=np.float64),
             }
         )
         if n < 2:
             return empty
         ids_raw = pdf["doc"].to_numpy()
+        if np.unique(ids_raw).size != n:
+            raise ValueError(
+                "semdedup: duplicate ids in one cell; their pairs would drop"
+            )
         order = np.argsort(ids_raw, kind="stable")
         ids = ids_raw[order]
         mat = np.stack(pdf["_v"].to_numpy()[order]).astype(np.float64)
@@ -727,13 +734,14 @@ def semdedup(
     kernel only pre-filters with a superset margin, so every surviving
     pair is byte-identical to the join shape's.  A degenerate cell — one
     giant boilerplate cluster — is bounded by ``max_cell`` with the
-    dropped cells surfaced through ``dropped_sink``, never silently; an
-    uncapped giant cell is tiled (O(n²) work, bounded transient memory),
-    the same quadratic the former self-join paid.  Each vector lives in
-    exactly one cell, so candidate pairs are unique by construction (no
-    dedup shuffle needed, unlike multi-table LSH).  Assumes ``id_col``
-    holds unique ids (duplicate-id rows no longer fan out through the
-    former rehydration joins; equal-id pairs still drop).
+    dropped cells surfaced through ``dropped_sink``, never silently.  An
+    uncapped giant cell arrives whole in ONE Python worker, which holds
+    its O(n·dim) vectors and pays O(n²) pair work, so set ``max_cell`` at
+    scale.  Each vector lives in exactly one cell, so candidate pairs are
+    unique by construction (no dedup shuffle needed, unlike multi-table
+    LSH).  Requires unique ``id_col`` values: the kernel raises on a
+    duplicate id within a cell instead of silently dropping its pairs
+    (duplicates split across cells are not detected).
     """
     from .dedup import cap_buckets
 

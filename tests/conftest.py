@@ -16,3 +16,18 @@ def spark():
     )
     yield session
     session.stop()
+
+
+def count_jobs(spark, action) -> int:
+    """Run ``action()`` under a fresh job group and return how many Spark
+    jobs it started — a cost signal that machine load cannot move."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

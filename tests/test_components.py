@@ -4,15 +4,18 @@ from __future__ import annotations
 
 import random
 
+import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from osm_wikidata_spark.operators.components import connected_components
 
 
-def _union_find(edges: list[tuple[str, str]]) -> dict[str, str]:
-    parent: dict[str, str] = {}
+def _union_find(edges: list[tuple]) -> dict:
+    parent: dict = {}
 
-    def find(x: str) -> str:
+    def find(x):
         parent.setdefault(x, x)
         while parent[x] != x:
             parent[x] = parent[parent[x]]
@@ -27,13 +30,14 @@ def _union_find(edges: list[tuple[str, str]]) -> dict[str, str]:
     return {x: find(x) for x in parent}
 
 
-def _check(spark, edges: list[tuple[str, str]]) -> None:
-    df = spark.createDataFrame(edges, "left_id string, right_id string")
+def _check(spark, edges: list[tuple], id_type: str = "string") -> None:
+    df = spark.createDataFrame(edges, f"left_id {id_type}, right_id {id_type}")
     got = {
         r["node"]: r["component"]
         for r in connected_components(df).collect()
     }
-    want = _union_find(edges)
+    # self-loop-only nodes are not in the output
+    want = _union_find([(a, b) for a, b in edges if a != b])
     assert got == want
 
 
@@ -57,6 +61,78 @@ def test_random_graphs(spark):
     ]
     edges = [(a, b) for a, b in edges if a != b]
     _check(spark, edges)
+
+
+_CHAIN = [(i, i + 1) for i in range(40)]
+_DUPS = [(1, 2), (2, 1), (1, 2), (3, 4), (4, 3), (2, 5), (5, 2)]
+
+
+@settings(max_examples=6, deadline=None, derandomize=True)
+@given(
+    id_type=st.sampled_from(["bigint", "string"]),
+    edges=st.lists(st.tuples(st.integers(0, 30), st.integers(0, 30)), max_size=40),
+)
+@example(id_type="bigint", edges=[])
+@example(id_type="string", edges=[])
+@example(id_type="bigint", edges=[(1, 1), (2, 2)])
+@example(id_type="string", edges=[(1, 1), (2, 2)])
+@example(id_type="bigint", edges=_DUPS)
+@example(id_type="string", edges=_DUPS)
+@example(id_type="bigint", edges=_CHAIN)
+@example(id_type="string", edges=_CHAIN)
+def test_differential_over_id_types(spark, id_type, edges):
+    """Labels equal union-find's over long and string ids, including empty
+    input, self-loop-only input, duplicates in both orientations and a
+    41-node chain that needs several rounds."""
+    if id_type == "string":
+        # zero-padded so string order matches numeric order
+        edges = [(f"n{a:03d}", f"n{b:03d}") for a, b in edges]
+    _check(spark, edges, id_type)
+
+
+def test_non_convergence_raises(spark):
+    """Running out of rounds before a star forest must not return split
+    components (a silent recall loss)."""
+    edges = [(i, i + 1) for i in range(19)]
+    df = spark.createDataFrame(edges, "left_id bigint, right_id bigint")
+    with pytest.raises(RuntimeError, match="star forest"):
+        connected_components(df, max_iterations=1).collect()
+
+
+def test_job_count_disjoint_triangles(spark):
+    """Job-ledger pin: one round reaches the star forest, its aggregate
+    decides that and carries the labels, and reading them is one more
+    job."""
+    from tests.conftest import count_jobs
+
+    edges = [
+        e
+        for k in range(100)
+        for e in ((3 * k, 3 * k + 1), (3 * k + 1, 3 * k + 2), (3 * k, 3 * k + 2))
+    ]
+    df = spark.createDataFrame(edges, "left_id bigint, right_id bigint")
+    assert count_jobs(spark, lambda: connected_components(df).collect()) == 7
+
+
+def test_lazy_input_computed_once(spark):
+    """Large-star reads its input twice; the input checkpoint keeps a lazy
+    upstream (pair generation, scoring UDFs) from running twice."""
+    sc = spark.sparkContext
+    calls = sc.accumulator(0)
+
+    def tap(x):
+        calls.add(1)
+        return x
+
+    # nondeterministic, so the self-loop filter is not pushed below it
+    # (a pushed-down copy would evaluate it a second time)
+    tapped = F.udf(tap, "bigint").asNondeterministic()
+    edges = [(i, i + 1) for i in range(0, 60, 2)]
+    df = spark.createDataFrame(edges, "a bigint, b bigint").select(
+        tapped("a").alias("left_id"), F.col("b").alias("right_id")
+    )
+    connected_components(df).collect()
+    assert calls.value == len(edges)
 
 
 def test_self_loops_and_duplicates(spark):

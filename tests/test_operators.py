@@ -1798,6 +1798,41 @@ def test_semdedup_planted_clusters(spark):
     assert dropped == {(0, 3)}
 
 
+def test_semdedup_string_ids_with_singleton_cell(spark):
+    """String ids cluster like long ids, and a singleton cell (the kernel's
+    empty output) keeps the id type instead of failing the Arrow cast."""
+    from osm_wikidata_spark.operators import similarity
+
+    rows = [
+        ("a", [1.0, 0.0, 0.0, 0.0]),
+        ("b", [0.99, 0.1, 0.0, 0.0]),
+        ("c", [0.97, 0.2, 0.0, 0.0]),
+        ("d", [0.0, 1.0, 0.0, 0.0]),  # alone in cell 1
+    ]
+    vecs = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
+    cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
+    out = similarity.semdedup(vecs, cents, threshold=0.95)
+    got = {(r["doc_id"], r["canonical_id"], r["cluster_size"]) for r in out.collect()}
+    assert got == {("a", "a", 3), ("b", "a", 3), ("c", "a", 3)}
+
+
+def test_semdedup_duplicate_ids_raise(spark):
+    """Duplicate ids inside one cell would silently lose their pairs;
+    the kernel refuses them."""
+    import pytest as _pytest
+
+    from osm_wikidata_spark.operators import similarity
+
+    rows = [
+        (1, [1.0, 0.0]),
+        (1, [0.99, 0.1]),
+        (2, [0.98, 0.1]),
+    ]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with _pytest.raises(Exception, match="duplicate ids"):
+        similarity.semdedup(vecs, [[1.0, 0.0]], threshold=0.95).collect()
+
+
 def test_dsir_weights_rank_target_like_docs_higher(spark):
     """A doc sharing the target's vocabulary outscores one that shares
     nothing; weights are partitioning-invariant."""
